@@ -992,123 +992,46 @@ def q_pii_redact(spark, sf):
     ).orderBy("doc_id")
 
 
-def _image_decode_frame(spark, sf):
-    """Multimodal known-answer decode: deterministic constant-valued
-    images synthesized in EVERY real decode format by id (PNG, GIF, PGM,
-    BMP, baseline JPEG, progressive JPEG), pushed as binary through the
-    image_features mapInPandas path (real decoders run on executors;
-    bytes never hit the driver). Output columns (dims + mean luminance)
-    are derivable from the construction formula alone — the oracle
-    restates that formula in SQL, fully independent of the decoders —
-    so any dimension/pixel error in any of the six decoders breaks the
-    value hash. Constant images make mean_lum exact even through JPEG:
-    a constant block quantizes to a DC-only spectrum that inverse-
-    transforms back exactly at quality 100 (proven in test_jpeg)."""
-    import pandas as pd
+def q_s12_remove_episodes(spark, sf):
+    """S12 cascading delete through the store's own dataflow
+    (kgspark/sources/store.py cascade_remove, the body of
+    GraphStore.remove_episode): a KG whose episodes are orders, whose
+    mentions link each order to its parts and suppliers, and whose edges
+    are (part, supplier) pairs carrying the sorted orders that support
+    them; every order with l_orderkey % 3 = 0 is then removed. The
+    oracle builds the graph from the surviving orders alone — the
+    one-shot-equality invariant, sharing no logic with the cascade."""
+    from kgspark.sources.store import cascade_remove
 
-    from kgspark.datapipe.multimodal import (
-        encode_bmp,
-        encode_gif,
-        encode_png,
-        encode_ppm,
-        image_features,
+    li = (spark.read.parquet(f"{sf}/lineitem.parquet")
+          .where(F.col("l_orderkey") <= 200)
+          .select(F.concat(F.lit("o"), F.col("l_orderkey")).alias("ep"),
+                  F.concat(F.lit("p"), F.col("l_partkey")).alias("part"),
+                  F.concat(F.lit("s"), F.col("l_suppkey")).alias("supp"),
+                  (F.col("l_orderkey") % 3 == 0).alias("doomed")))
+    mentions = li.select(F.col("ep").alias("episode_uuid"),
+                         F.explode(F.array("part", "supp")).alias("entity_uuid"))
+    g = {
+        "episodes": li.select(F.col("ep").alias("uuid")).distinct(),
+        "mentions": mentions.distinct(),
+        "edges": li.groupBy("part", "supp").agg(
+            F.array_sort(F.collect_set("ep")).alias("episodes"))
+        .select(F.concat_ws("_", "part", "supp").alias("uuid"), "episodes"),
+        "nodes": mentions.select(F.col("entity_uuid").alias("uuid")).distinct(),
+    }
+    doomed = sorted(r["ep"] for r in
+                    li.where("doomed").select("ep").distinct().collect())
+    kept = cascade_remove(g, doomed)
+    none = F.lit(None).cast("string")
+    return (
+        kept["episodes"].select(F.lit("episode").alias("kind"), "uuid",
+                                none.alias("support"))
+        .unionByName(kept["edges"].select(
+            F.lit("edge").alias("kind"), "uuid",
+            F.array_join("episodes", ",").alias("support")))
+        .unionByName(kept["nodes"].select(F.lit("node").alias("kind"), "uuid",
+                                          none.alias("support")))
     )
-
-    def gen(batches):
-        import numpy as np
-
-        from kgspark.datapipe.jpegcodec import (
-            encode_jpeg,
-            encode_jpeg_progressive,
-        )
-
-        encoders = [
-            encode_png, encode_gif, encode_ppm, encode_bmp,
-            lambda im: encode_jpeg(im, quality=100),
-            lambda im: encode_jpeg_progressive(im, quality=100),
-        ]
-        for pdf in batches:
-            rows = []
-            for i in pdf["id"]:
-                i = int(i)
-                w = 16 + (i % 7) * 8
-                h = 12 + (i % 5) * 8
-                c = 40 + (i % 50) * 4
-                img = np.full((h, w), c, dtype=np.uint8)
-                rows.append((i, bytearray(encoders[i % 6](img))))
-            yield pd.DataFrame(rows, columns=["id", "payload"])
-
-    payloads = spark.range(120).repartition(8).mapInPandas(
-        gen, "id long, payload binary")
-    return image_features(payloads, "id", "payload").select(
-        "id",
-        F.col("width").cast("long").alias("width"),
-        F.col("height").cast("long").alias("height"),
-        F.round("mean_lum", 3).alias("mean_lum"),
-    )
-
-
-def _audio_decode_frame(spark):
-    """Known-answer audio decode: deterministic square waves
-    (amplitude/length/period fixed by id) encoded as real 16-bit WAV
-    (even ids) or real FLAC (odd ids — Rice+LPC losslessly decoded by
-    the pure-numpy flaccodec.py, RFC 9639), decoded through the
-    audio_features mapInPandas path. n_samples, RMS (= amplitude exactly
-    for a square wave; FLAC is lossless so this holds bit-for-bit) and
-    zero-crossing count all follow from the construction formula, which
-    the oracle restates in SQL independent of both decoders."""
-    import pandas as pd
-
-    from kgspark.datapipe.flaccodec import encode_flac
-    from kgspark.datapipe.multimodal import audio_features, encode_wav
-
-    def gen(batches):
-        import numpy as np
-
-        for pdf in batches:
-            rows = []
-            for i in pdf["id"]:
-                i = int(i)
-                amp = 1000 + (i % 7) * 100
-                m = 50 + (i % 13)          # half-periods of 16 samples
-                sq = np.tile(np.concatenate(
-                    [np.full(16, amp, np.int16),
-                     np.full(16, -amp, np.int16)]), (m + 1) // 2)[: 16 * m]
-                enc = encode_wav(sq) if i % 2 == 0 else encode_flac(sq)
-                rows.append((i, bytearray(enc)))
-            yield pd.DataFrame(rows, columns=["id", "payload"])
-
-    payloads = spark.range(120).repartition(8).mapInPandas(
-        gen, "id long, payload binary")
-    return audio_features(payloads, "id", "payload").select(
-        "id",
-        F.col("n_samples").cast("long").alias("n_samples"),
-        F.round("rms", 3).alias("rms"),
-        F.col("zero_crossings").cast("long").alias("zero_crossings"),
-    )
-
-
-def q_media_decode(spark, sf):
-    """Multimodal known-answer decode, image AND audio halves unioned
-    into one harmonized schema (kind, id, d1, d2, v): image rows carry
-    (d1=width, d2=height, v=mean_lum) from the six real image decoders
-    (see _image_decode docstring above), audio rows carry
-    (d1=n_samples, d2=zero_crossings, v=rms) from the WAV decoder.
-    Every expected value follows from the synthesis formulas alone, so
-    the oracle is fully decoder-independent; a pixel/sample error in ANY
-    decoder breaks the value hash. (Formerly two registered queries
-    `image_decode` + `audio_decode`; consolidated in round 5 for the
-    driver's 50-query graded cap.)"""
-    img = _image_decode_frame(spark, sf).select(
-        F.lit("image").alias("kind"), "id",
-        F.col("width").alias("d1"), F.col("height").alias("d2"),
-        F.col("mean_lum").alias("v"))
-    aud = _audio_decode_frame(spark).select(
-        F.lit("audio").alias("kind"), "id",
-        F.col("n_samples").alias("d1"),
-        F.col("zero_crossings").alias("d2"),
-        F.col("rms").alias("v"))
-    return img.unionByName(aud)
 
 
 def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
@@ -1137,8 +1060,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         # audio_decode ungraded), so the 53-query surface is merged to 50
         # keys with zero coverage loss: lang_detect + quality_score →
         # text_quality (join), embedding_neardup + embedding_neardup_lsh
-        # → embedding_neardup (method-tagged union), image_decode +
-        # audio_decode → media_decode (kind-tagged union)
+        # → embedding_neardup (method-tagged union)
         "text_quality": q_text_quality,
         "c1_projection": q_c1_projection,
         "q6_hybrid": q_q6_hybrid,
@@ -1180,10 +1102,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "chunk_documents": q_chunk_documents,
         "pack_sequences": q_pack_sequences,
         "stratified_sample": q_stratified_sample,
-        # multimodal known-answer decodes (datapipe/multimodal.py +
-        # jpegcodec.py): every real image decoder + the WAV audio path,
-        # checked against construction-formula oracles
-        "media_decode": q_media_decode,
+        "s12_remove_episodes": q_s12_remove_episodes,
     }
 
 
@@ -1334,21 +1253,24 @@ def oracle_sql() -> dict[str, str]:
         "pack_sequences": pack_oracle,
         "stratified_sample": mix_oracle,
         "e4_attributes": e4_oracle,
-        # multimodal known-answer oracle: the expected features restated
-        # from the image/audio construction formulas — independent of the
-        # decoders under test (see q_media_decode)
-        "media_decode": """
-            SELECT 'image' AS kind, id,
-                   16 + (id % 7) * 8 AS d1,
-                   12 + (id % 5) * 8 AS d2,
-                   CAST(40 + (id % 50) * 4 AS DOUBLE) AS v
-            FROM range(120) t(id)
+        # S12: the graph built from the surviving orders only — no
+        # cascade logic (see q_s12_remove_episodes)
+        "s12_remove_episodes": """
+            WITH li AS (
+              SELECT 'o' || l_orderkey AS ep, 'p' || l_partkey AS part,
+                     's' || l_suppkey AS supp
+              FROM lineitem WHERE l_orderkey <= 200 AND l_orderkey % 3 <> 0
+            )
+            SELECT DISTINCT 'episode' AS kind, ep AS uuid,
+                   CAST(NULL AS VARCHAR) AS support FROM li
             UNION ALL
-            SELECT 'audio' AS kind, id,
-                   16 * (50 + (id % 13)) AS d1,
-                   50 + (id % 13) - 1 AS d2,
-                   CAST(1000 + (id % 7) * 100 AS DOUBLE) AS v
-            FROM range(120) t(id)
+            SELECT 'edge', part || '_' || supp,
+                   string_agg(DISTINCT ep, ',' ORDER BY ep)
+            FROM li GROUP BY part, supp
+            UNION ALL
+            SELECT DISTINCT 'node', part, NULL FROM li
+            UNION ALL
+            SELECT DISTINCT 'node', supp, NULL FROM li
         """,
         "s8_keyset_pagination": """
             SELECT event_id, user_id, event_type FROM events

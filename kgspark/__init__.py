@@ -2,7 +2,7 @@
 construction and retrieval engine with the capabilities of
 markalosey/graphiti (graphiti-core v0.11.6).
 
-Blueprint: /root/repo/SURVEY.md. Every operator cites the reference
+Blueprint: SURVEY.md at the repository root. Every operator cites the reference
 file:line whose *semantics* it reproduces; the implementation is
 idiomatic Spark DataFrame/SQL dataflow, not a port.
 
@@ -15,7 +15,7 @@ Layout
 - ``kgspark.search``       — retrieval (Q1-Q15): BM25, cosine, BFS, rerankers
 - ``kgspark.sources``      — graph-table store (parquet now, Iceberg-shaped API)
 - ``kgspark.pipeline``     — end-to-end add_episode_bulk-equivalent batch job
-- ``kgspark.datapipe``     — large-scale training-data ops (dedup/ANN/text QA/multimodal)
+- ``kgspark.datapipe``     — large-scale training-data ops (dedup/ANN/text QA/curation)
 """
 
 __version__ = "0.1.0"

@@ -2,5 +2,4 @@
 dedup (exact / substring-span / MinHash-LSH / SimHash / n-gram Jaccard /
 embedding-cosine), ANN similarity search, text analysis, bigram-LM quality
 scoring, curation (decontamination / repetition / URL dedup / PII),
-chunking + sequence packing, stratified sampling, multimodal column
-plumbing with real WAV/PGM/PPM/BMP/PNG/GIF/JPEG decode kernels."""
+chunking + sequence packing and stratified sampling."""

@@ -293,7 +293,7 @@ def _kcore_loop_delta(adj, adj_a, max_iter, Window):
                 "id", "old",
                 F.coalesce("est", "old").alias("est"),
             )
-            .localCheckpoint()
+            .localCheckpoint(eager=False)
         )
         frontier = merged.where("est != old").select("id")
         est = merged.select("id", "est")
@@ -306,14 +306,7 @@ def _kcore_loop_delta(adj, adj_a, max_iter, Window):
             raise RuntimeError(
                 f"kcore_numbers: no fixpoint after {max_iter} h-index rounds"
             )
-    global LAST_KCORE_ROUNDS
-    LAST_KCORE_ROUNDS = rounds  # diagnostic only (benchmark round counts)
     return est.select(F.col("id").alias("node"), F.col("est").alias("core"))
-
-
-#: rounds used by the most recent convergence-mode kcore_numbers call on
-#: this driver — diagnostic, read by tools/datapipe_bench.py
-LAST_KCORE_ROUNDS: int | None = None
 
 
 def kcore_oracle_sql(edges_sql: str, n_iter: int) -> str:

@@ -399,27 +399,41 @@ class GraphStore:
             rd = lambda t: self.read_parts(spark, t, parts)  # noqa: E731
         else:
             rd = lambda t: self.read(spark, t)  # noqa: E731
-        episodes = rd("episodes").where(F.col("uuid") != episode_uuid)
-        mentions = rd("mentions").where(F.col("episode_uuid") != episode_uuid)
-        edges = (
-            rd("edges").withColumn("episodes", F.array_remove("episodes", episode_uuid))
-            .where(F.size("episodes") > 0)
-        )
-        # mentions here cover every group in the touched partitions, so
-        # hash-collision co-tenant nodes keep their support rows
-        live = mentions.select(F.col("entity_uuid").alias("uuid")).distinct()
-        nodes = rd("nodes").join(live, "uuid", "left_semi")
+        # the read mentions cover every group in the touched partitions,
+        # so hash-collision co-tenant nodes keep their support rows
+        kept = cascade_remove({t: rd(t) for t in tables}, [episode_uuid])
         # materialize EVERY frame before overwriting ANY table — nodes'
         # lineage reads the mentions files the loop would have replaced
-        frames = [(name, df.localCheckpoint()) for name, df in
-                  [("episodes", episodes), ("mentions", mentions),
-                   ("edges", edges), ("nodes", nodes)]]
+        frames = [(name, kept[name].localCheckpoint()) for name in tables]
         for name, df in frames:
             if scoped:
                 self._overwrite_parts(name, df, parts)
             else:
                 self.write(name, df)
         return group_id
+
+
+def cascade_remove(g: dict[str, DataFrame],
+                   episode_uuids: list[str]) -> dict[str, DataFrame]:
+    """S12 cascade as a pure dataflow over the ``episodes`` /
+    ``mentions`` / ``edges`` / ``nodes`` frames of ``g``: drop the
+    listed episodes and their mentions, strip them from each edge's
+    ``episodes`` array (order and duplicates kept, as ``array_remove``
+    does), drop edges left unsupported, and keep only nodes a surviving
+    mention still reaches."""
+    gone = F.array(*[F.lit(u) for u in episode_uuids])
+    episodes = g["episodes"].where(~F.col("uuid").isin(episode_uuids))
+    mentions = g["mentions"].where(~F.col("episode_uuid").isin(episode_uuids))
+    edges = (
+        g["edges"].withColumn(
+            "episodes",
+            F.filter("episodes", lambda e: ~F.array_contains(gone, e)))
+        .where(F.size("episodes") > 0)
+    )
+    live = mentions.select(F.col("entity_uuid").alias("uuid")).distinct()
+    nodes = g["nodes"].join(live, "uuid", "left_semi")
+    return {"episodes": episodes, "mentions": mentions,
+            "edges": edges, "nodes": nodes}
 
 
 # ------------------------------------------------------------------ S7/S8

@@ -1,4 +1,4 @@
-"""datapipe operator tests: dedup, ANN, text QA, multimodal plumbing."""
+"""datapipe operator tests: dedup, ANN, text QA."""
 
 import pandas as pd
 from pyspark.sql import functions as F
@@ -11,7 +11,6 @@ from kgspark.datapipe.dedupe import (
     ngram_jaccard_pairs,
     simhash_pairs,
 )
-from kgspark.datapipe.multimodal import audio_features, image_features, sample_frames
 from kgspark.datapipe.textqa import (
     bpe_ish_token_count,
     detect_lang,
@@ -201,75 +200,6 @@ def test_fingerprint_order_sensitive(spark):
     assert fps[0] != fps[1]
 
 
-def test_multimodal_plumbing(spark):
-    df = spark.createDataFrame(pd.DataFrame({
-        "id": [1, 2],
-        "payload": [b"fake-image-bytes-1", b"fake-image-bytes-2"],
-    }))
-    img = image_features(df, "id", "payload").collect()
-    assert len(img) == 2 and all(r["width"] == 32 for r in img)
-    assert img[0]["phash"] != img[1]["phash"]
-    aud = audio_features(df, "id", "payload").collect()
-    assert len(aud) == 2 and all(r["rms"] > 0 for r in aud)
-    frames = sample_frames(df, "id", "payload", every_n=5, max_frames=3).collect()
-    assert len(frames) == 6
-    assert sorted({r["frame_idx"] for r in frames}) == [0, 5, 10]
-    # determinism: same payload → same features
-    img2 = image_features(df, "id", "payload").collect()
-    assert [r["phash"] for r in img] == [r["phash"] for r in img2]
-
-
-def test_multimodal_real_decode(spark):
-    """Real bytes (WAV / PGM / PPM / BMP) decode end-to-end through the
-    mapInPandas path — no fake-decode flag involved; decoded stats match
-    numpy ground truth computed outside Spark."""
-    import numpy as np
-
-    from kgspark.datapipe.multimodal import (
-        encode_bmp,
-        encode_ppm,
-        encode_ppm_rgb,
-        encode_wav,
-    )
-
-    # --- images: a gradient PGM, its RGB PPM twin, and a BMP
-    grad = np.arange(48 * 40, dtype=np.uint64).reshape(48, 40) % 256
-    gray = grad.astype(np.uint8)
-    rgb = np.repeat(gray[:, :, None], 3, axis=2)
-    df = spark.createDataFrame(pd.DataFrame({
-        "id": [1, 2, 3],
-        "payload": [encode_ppm(gray), encode_ppm_rgb(rgb), encode_bmp(gray)],
-    }))
-    rows = {r["id"]: r for r in image_features(df, "id", "payload").collect()}
-    assert all(rows[i]["width"] == 40 and rows[i]["height"] == 48
-               for i in (1, 2, 3))
-    want_mean = round(float(gray.mean()), 3)
-    assert rows[1]["mean_lum"] == want_mean
-    assert rows[3]["mean_lum"] == want_mean  # BMP roundtrips exactly
-    # P6 luma of an (r=g=b) image equals the grayscale: (299+587+114)/1000
-    assert rows[2]["mean_lum"] == want_mean
-    assert rows[1]["phash"] == rows[2]["phash"] == rows[3]["phash"]
-
-    # --- audio: a 440-sample int16 ramp, known rms / zero crossings
-    t = np.arange(2048)
-    sig = (10000 * np.sin(t / 8.0)).astype(np.int16)
-    from kgspark.datapipe.flaccodec import encode_flac
-
-    # the SAME signal as WAV and as FLAC must produce identical features
-    # (FLAC is lossless; flaccodec.py decodes it for real on executors)
-    adf = spark.createDataFrame(pd.DataFrame({
-        "id": [1, 2], "payload": [encode_wav(sig), encode_flac(sig)]}))
-    feats = {r["id"]: r for r in
-             audio_features(adf, "id", "payload").collect()}
-    want_rms = round(float(np.sqrt((sig.astype(np.float64) ** 2).mean())), 3)
-    s32 = sig.astype(np.int32)
-    want_zc = int(((s32[:-1] * s32[1:]) < 0).sum())
-    for a in feats.values():
-        assert a["n_samples"] == 2048
-        assert a["rms"] == want_rms
-        assert a["zero_crossings"] == want_zc
-
-
 def _clustered_vecs():
     """60 vectors in 3 well-separated axis-aligned clusters (dim 8),
     deterministic jitter from a hash of the index."""
@@ -419,217 +349,6 @@ def test_ivf_index_partition_pruning(spark, tmp_path):
     with pytest.raises(Exception):
         spark.read.schema(idx_schema).parquet(path).where(
             F.col("cid") >= 0).select(F.sum(F.col("vec_id"))).collect()
-
-
-def test_png_decode_known_answer_vectors():
-    """Decoder vs hand-computed filter vectors from the PNG spec (§9) —
-    independent of encode_png, so a symmetric encoder/decoder bug can't
-    hide. IDAT bytes below were filtered BY HAND for the 2×3 image
-    [[10,20,30],[40,50,60]]."""
-    import struct
-    import zlib
-
-    import numpy as np
-
-    from kgspark.datapipe.multimodal import _decode_png_bytes
-
-    def png(idat_raw: bytes, w: int, h: int) -> bytes:
-        def chunk(tag, data):
-            return (struct.pack(">I", len(data)) + tag + data
-                    + struct.pack(">I", zlib.crc32(tag + data)))
-        ihdr = struct.pack(">IIBBBBB", w, h, 8, 0, 0, 0, 0)
-        return (b"\x89PNG\r\n\x1a\n" + chunk(b"IHDR", ihdr)
-                + chunk(b"IDAT", zlib.compress(idat_raw)) + chunk(b"IEND", b""))
-
-    want = np.array([[10, 20, 30], [40, 50, 60]], dtype=np.uint8)
-    # Paeth both rows: row0 pred degenerates to left → [10,10,10];
-    # row1: x0 pred=up(10)→30, x1 pred=left(40)→10, x2 pred=left(50)→10
-    paeth = bytes([4, 10, 10, 10, 4, 30, 10, 10])
-    assert np.array_equal(_decode_png_bytes(png(paeth, 3, 2)), want)
-    # Average both rows: row0 → [10,15,20]; row1 (prev=[10,20,30]) →
-    # x0 (0+10)>>1=5→35, x1 (40+20)>>1=30→20, x2 (50+30)>>1=40→20
-    avg = bytes([3, 10, 15, 20, 3, 35, 20, 20])
-    assert np.array_equal(_decode_png_bytes(png(avg, 3, 2)), want)
-    # Sub row0 [10,10,10]; Up row1 (cur-prev) [30,30,30]
-    subup = bytes([1, 10, 10, 10, 2, 30, 30, 30])
-    assert np.array_equal(_decode_png_bytes(png(subup, 3, 2)), want)
-
-
-def test_pnm16_and_bmp_palette_decode():
-    """16-bit PNM (big-endian samples, rounded rescale to 8-bit) and
-    8-bit-paletted / 32-bit BMP variants, bytes hand-built in-test."""
-    import struct
-
-    import numpy as np
-
-    from kgspark.datapipe.multimodal import _decode_bmp_bytes, _decode_pnm_bytes
-
-    # --- 16-bit PGM: maxval 65535, values chosen to check rounding
-    vals = np.array([[0, 32768, 65535], [257, 65278, 12850]], dtype=">u2")
-    pgm16 = b"P5 3 2 65535\n" + vals.tobytes()
-    want = ((vals.astype(np.uint32) * 255 + 32767) // 65535).astype(np.uint8)
-    assert np.array_equal(_decode_pnm_bytes(pgm16), want)
-
-    # --- 16-bit PPM with r=g=b equals the grayscale twin
-    rgb16 = np.repeat(vals[:, :, None], 3, axis=2).astype(">u2")
-    ppm16 = b"P6 3 2 65535\n" + rgb16.tobytes()
-    assert np.array_equal(_decode_pnm_bytes(ppm16), want)
-
-    # --- 8-bit paletted BMP: 2x3 bottom-up, identity gray palette
-    idx = np.array([[10, 200, 30], [250, 0, 128]], dtype=np.uint8)
-
-    def bmp8(idx: np.ndarray) -> bytes:
-        h, w = idx.shape
-        pal = b"".join(bytes([i, i, i, 0]) for i in range(256))
-        stride = (w + 3) // 4 * 4
-        body = b"".join(idx[y].tobytes() + b"\x00" * (stride - w)
-                        for y in range(h - 1, -1, -1))  # bottom-up
-        off = 14 + 40 + len(pal)
-        return (b"BM" + struct.pack("<IHHI", off + len(body), 0, 0, off)
-                + struct.pack("<IiiHHIIiiII", 40, w, h, 1, 8, 0,
-                              len(body), 2835, 2835, 256, 0)
-                + pal + body)
-
-    assert np.array_equal(_decode_bmp_bytes(bmp8(idx)), idx)
-
-    # --- 32-bit BMP (BGRA): gray values survive the alpha drop
-    def bmp32(gray: np.ndarray) -> bytes:
-        h, w = gray.shape
-        body = b"".join(
-            b"".join(bytes([v, v, v, 255]) for v in gray[y])
-            for y in range(h - 1, -1, -1))
-        off = 14 + 40
-        return (b"BM" + struct.pack("<IHHI", off + len(body), 0, 0, off)
-                + struct.pack("<IiiHHIIiiII", 40, w, h, 1, 32, 0,
-                              len(body), 2835, 2835, 0, 0)
-                + body)
-
-    assert np.array_equal(_decode_bmp_bytes(bmp32(idx)), idx)
-
-
-def test_png_adam7_interlaced_decode():
-    """Adam7 decode vs an in-test interlaced writer built straight from
-    the spec pass table (§8.2) — independent of the library decoder.
-    Odd dimensions stress the ceil pass-size math; the 2×2 case leaves
-    several passes empty."""
-    import struct
-    import zlib
-
-    import numpy as np
-
-    from kgspark.datapipe.multimodal import _decode_png_bytes
-
-    PASSES = ((0, 0, 8, 8), (4, 0, 8, 8), (0, 4, 4, 8), (2, 0, 4, 4),
-              (0, 2, 2, 4), (1, 0, 2, 2), (0, 1, 1, 2))
-
-    def interlaced_png(img: np.ndarray) -> bytes:
-        h, w = img.shape
-        raw = bytearray()
-        for x0, y0, dx, dy in PASSES:
-            sub = img[y0::dy, x0::dx]
-            if sub.size == 0:
-                continue
-            for row in sub:
-                raw.append(0)            # filter type None
-                raw.extend(row.tobytes())
-
-        def chunk(tag, data):
-            return (struct.pack(">I", len(data)) + tag + data
-                    + struct.pack(">I", zlib.crc32(tag + data)))
-
-        ihdr = struct.pack(">IIBBBBB", w, h, 8, 0, 0, 0, 1)  # interlace=1
-        return (b"\x89PNG\r\n\x1a\n" + chunk(b"IHDR", ihdr)
-                + chunk(b"IDAT", zlib.compress(bytes(raw)))
-                + chunk(b"IEND", b""))
-
-    rng = np.random.default_rng(5)
-    for h, w in ((13, 11), (8, 8), (2, 2), (1, 9), (16, 5)):
-        img = rng.integers(0, 256, size=(h, w), dtype=np.uint8)
-        assert np.array_equal(_decode_png_bytes(interlaced_png(img)), img), \
-            (h, w)
-
-
-def test_png_gif_real_decode_through_spark(spark):
-    """Real PNG (every filter type, gray + RGB + palette + RGBA) and GIF
-    bytes decoded end-to-end through the image_features mapInPandas
-    path; stats match numpy ground truth computed outside Spark."""
-    import struct
-    import zlib
-
-    import numpy as np
-
-    from kgspark.datapipe.multimodal import (
-        _decode_png_bytes,
-        encode_gif,
-        encode_png,
-        encode_ppm,
-    )
-
-    rng = np.random.default_rng(42)
-    gray = rng.integers(0, 256, size=(48, 40), dtype=np.uint8)
-    rgb = np.repeat(gray[:, :, None], 3, axis=2)
-    filters = [i % 5 for i in range(48)]
-
-    # palette PNG (ctype 3): grayscale palette, so luma(pal[i]) == i
-    def chunk(tag, data):
-        return (struct.pack(">I", len(data)) + tag + data
-                + struct.pack(">I", zlib.crc32(tag + data)))
-    plte = bytes(v for g in range(256) for v in (g, g, g))
-    raw = b"".join(b"\x00" + gray[y].tobytes() for y in range(48))
-    pal_png = (b"\x89PNG\r\n\x1a\n"
-               + chunk(b"IHDR", struct.pack(">IIBBBBB", 40, 48, 8, 3, 0, 0, 0))
-               + chunk(b"PLTE", plte) + chunk(b"IDAT", zlib.compress(raw))
-               + chunk(b"IEND", b""))
-    # RGBA PNG (ctype 6), alpha ignored by the luma conversion
-    rgba = np.concatenate(
-        [rgb, rng.integers(0, 256, size=(48, 40, 1), dtype=np.uint8)], axis=2)
-    raw6 = b"".join(b"\x00" + rgba[y].tobytes() for y in range(48))
-    rgba_png = (b"\x89PNG\r\n\x1a\n"
-                + chunk(b"IHDR", struct.pack(">IIBBBBB", 40, 48, 8, 6, 0, 0, 0))
-                + chunk(b"IDAT", zlib.compress(raw6)) + chunk(b"IEND", b""))
-    assert np.array_equal(_decode_png_bytes(pal_png), gray)
-    assert np.array_equal(_decode_png_bytes(rgba_png), gray)
-
-    df = spark.createDataFrame(pd.DataFrame({
-        "id": [1, 2, 3, 4, 5, 6],
-        "payload": [encode_png(gray, filters), encode_png(rgb, filters),
-                    pal_png, rgba_png, encode_gif(gray), encode_ppm(gray)],
-    }))
-    rows = {r["id"]: r for r in image_features(df, "id", "payload").collect()}
-    assert all(rows[i]["width"] == 40 and rows[i]["height"] == 48
-               for i in rows)
-    # gray PNG, palette PNG, GIF and the PGM control decode identically;
-    # RGB/RGBA go through the same integer luma (r=g=b → same pixels)
-    want_mean = round(float(gray.mean()), 3)
-    ref = rows[6]
-    for i in (1, 2, 3, 4, 5):
-        assert rows[i]["mean_lum"] == want_mean
-        assert rows[i]["phash"] == ref["phash"]
-
-
-def test_png_unsupported_variants_raise():
-    import struct
-    import zlib
-
-    import numpy as np
-    import pytest as _pytest
-
-    from kgspark.datapipe.multimodal import _decode_png_bytes, encode_png
-
-    def rewrite_ihdr(png: bytes, depth=8, ctype=0, interlace=0) -> bytes:
-        ihdr = struct.pack(">IIBBBBB", 3, 2, depth, ctype, 0, 0, interlace)
-        return (png[:8] + struct.pack(">I", 13) + b"IHDR" + ihdr
-                + struct.pack(">I", zlib.crc32(b"IHDR" + ihdr)) + png[33:])
-
-    base = encode_png(np.zeros((2, 3), dtype=np.uint8))
-    with _pytest.raises(NotImplementedError, match="16|depth"):
-        _decode_png_bytes(rewrite_ihdr(base, depth=16))
-    # interlace=1 is SUPPORTED since r5 (test_png_adam7_interlaced_decode)
-    # but this stream's IDAT is laid out progressively, so flipping only
-    # the IHDR flag must be caught by the pass-size accounting, not
-    # silently mis-decoded
-    with _pytest.raises(ValueError, match="interlaced|size"):
-        _decode_png_bytes(rewrite_ihdr(base, interlace=1))
 
 
 def test_substring_dup_spans_cross_doc_and_self(spark):

@@ -6,9 +6,10 @@ hash. Usage: python tools/check_oracle.py [sf_dir]"""
 from __future__ import annotations
 
 import hashlib
+import os
 import sys
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 
 def canon(rows, cols):
@@ -27,18 +28,24 @@ def canon(rows, cols):
     return hashlib.sha256("\n".join(out).encode()).hexdigest()[:16], len(out)
 
 
-def main():
-    sf = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.01"
+def oracle_db(sf):
+    """DuckDB connection with one view per testdata table under ``sf``."""
     import duckdb
 
-    import __spark_entry__ as entry_mod
-    from kgspark.session import get_spark
-
-    spark = get_spark("oracle-check", master="local[8]", shuffle_partitions=8)
     con = duckdb.connect()
     for t in ["region", "nation", "customer", "supplier", "part", "orders",
               "lineitem", "events", "documents", "embeddings"]:
         con.sql(f"CREATE VIEW {t} AS SELECT * FROM '{sf}/{t}.parquet'")
+    return con
+
+
+def main():
+    sf = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.01"
+    import __spark_entry__ as entry_mod
+    from kgspark.session import get_spark
+
+    spark = get_spark("oracle-check", master="local[8]", shuffle_partitions=8)
+    con = oracle_db(sf)
 
     qs, oracles = entry_mod.queries(), entry_mod.oracle_sql()
     only = set(sys.argv[2].split(",")) if len(sys.argv) > 2 else None

@@ -91,12 +91,6 @@ def main() -> None:
           denom=n_edges, rate_key="edges_per_sec")
     timed("kcore_converged", lambda: kcore_numbers(edges).count(),
           denom=n_edges, rate_key="edges_per_sec")
-    from kgspark.operators import graphstats as _gs
-
-    # measured convergence-round envelope on this web-shaped graph
-    # (VERDICT r4 item 6); delta iteration bounds per-round work, rounds
-    # stay O(diameter) — record what that is in practice
-    res["kcore_converged"]["rounds"] = _gs.LAST_KCORE_ROUNDS
     timed("triangle_stats", lambda: triangle_stats(edges).count(),
           denom=n_edges, rate_key="edges_per_sec")
 

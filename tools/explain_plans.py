@@ -10,9 +10,10 @@ from __future__ import annotations
 
 import contextlib
 import io
+import os
 import sys
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 CHECKS = {
     # query -> list of (marker substring, why it matters)
@@ -159,7 +160,7 @@ def main() -> None:
         lines.append("\n```\n" + plan.strip()[:4000] + "\n```\n")
         sections.append("\n".join(lines))
 
-    with open("/root/repo/PLANS.md", "w") as f:
+    with open(os.path.join(os.path.dirname(os.path.dirname(os.path.abspath(__file__))), "PLANS.md"), "w") as f:
         f.write(
             "# PLANS — physical-plan evidence (auto-generated by "
             "tools/explain_plans.py)\n\nEach section shows "
