@@ -31,6 +31,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from kgspark.functions.text import norm_name as _norm_name_col
+from kgspark.functions.text import url_group_id
 from kgspark.operators.community import build_communities as _build_communities
 from kgspark.operators.community import remove_communities as _remove_communities
 from kgspark.schemas import PAGES
@@ -48,10 +49,8 @@ from kgspark.search.recipes import (
 from kgspark.search.search import SearchResults
 from kgspark.search.search import get_nodes_and_edges_by_episode as _by_episode
 from kgspark.search.search import search as _search
-from kgspark.sources.store import GraphStore
+from kgspark.sources.store import GRAPH_TABLES, INGEST_TABLES, GraphStore
 from kgspark.streaming.incremental import ingest_pages, reassemble_groups
-
-GRAPH_TABLES = ("episodes", "nodes", "edges", "mentions")
 
 
 class KGSpark:
@@ -118,8 +117,7 @@ class KGSpark:
             # its new summaries — re-splice the batch's groups so the
             # community-kind postings reflect the updated communities
             groups = pages.select(
-                F.regexp_extract("url", r"^https?://([^/]+)/", 1)
-                .alias("group_id")).distinct()
+                url_group_id(F.col("url")).alias("group_id")).distinct()
             self._refresh_postings_if_maintained(groups)
         self._invalidate_postings()
         return counts
@@ -242,9 +240,9 @@ class KGSpark:
                 F.col("pred"), F.col("target_node_uuid"), F.col("episode_uuid"),
                 F.col("idx").cast("string"))))
 
-        self.store.append_grouped("raw_episodes", ep, bucket_key="uuid")
-        self.store.append_grouped("ext_nodes", nodes, bucket_key="uuid")
-        self.store.append_grouped("ext_edges", edges, bucket_key="uuid")
+        self.store.append_grouped("raw_episodes", ep)
+        self.store.append_grouped("ext_nodes", nodes)
+        self.store.append_grouped("ext_edges", edges)
         groups = self.spark.createDataFrame([(group_id,)], "group_id string")
         counts = reassemble_groups(self.spark, self.store, groups, now=now,
                                    embed_dim=self.embed_dim,
@@ -266,8 +264,8 @@ class KGSpark:
         maintain it incrementally as group-partitioned store tables
         (fulltext.refresh_postings_groups), so this is a table read —
         NOT an O(corpus) rebuild per graph state. The in-memory full
-        build remains only as a fallback for graphs written around the
-        facade (store.write_all in tests)."""
+        build remains only as a fallback for stores without a
+        maintained index (graph tables written around the facade)."""
         if self._postings is None:
             idx = read_index(self.spark, self.store)
             self._postings = (idx or build_index(self.graph())).persist()
@@ -436,18 +434,11 @@ class KGSpark:
                .where(F.col("uuid") == edge_uuid).select("group_id").take(1))
         if not hit:
             return False
-        groups = self.spark.createDataFrame(
-            [(hit[0]["group_id"],)], "group_id string")
-        if self.store.is_partitioned("edges"):
-            parts = self.store.group_parts(groups)
-            kept = (self.store.read_parts(self.spark, "edges", parts)
-                    .where(F.col("uuid") != edge_uuid))
-            self.store._overwrite_parts("edges", kept, parts)
-        else:
-            kept = (self.store.read(self.spark, "edges")
-                    .where(F.col("uuid") != edge_uuid).localCheckpoint())
-            self.store.write("edges", kept)
-        self._refresh_postings_if_maintained(groups)
+        gid = hit[0]["group_id"]
+        self.store.delete_rows(self.spark, "edges", [gid],
+                               F.col("uuid") == edge_uuid)
+        self._refresh_postings_if_maintained(
+            self.spark.createDataFrame([(gid,)], "group_id string"))
         self._invalidate_postings()
         return True
 
@@ -476,9 +467,9 @@ class KGSpark:
         self._invalidate_postings()
 
     def delete_group(self, group_ids: list[str]) -> None:
-        for t in GRAPH_TABLES + ("raw_episodes", "ext_nodes", "ext_edges",
-                                 "postings", "doc_stats"):
-            self.store.delete_by_group(self.spark, t, group_ids)
+        for t in INGEST_TABLES:
+            self.store.delete_rows(self.spark, t, group_ids,
+                                   F.col("group_id").isin(group_ids))
         self._invalidate_postings()
 
     def compact(self, tables: tuple[str, ...] | None = None,
@@ -488,9 +479,7 @@ class KGSpark:
         file per micro-batch per touched partition; run this on a
         schedule to keep scan open-cost flat. Row-identical, skips
         already-compact partitions. Returns per-table stats."""
-        if tables is None:
-            tables = GRAPH_TABLES + ("raw_episodes", "ext_nodes",
-                                     "ext_edges", "postings", "doc_stats")
         return {t: self.store.compact(self.spark, t,
                                       target_bytes=target_bytes)
-                for t in tables if self.store.exists(t)}
+                for t in (INGEST_TABLES if tables is None else tables)
+                if self.store.exists(t)}

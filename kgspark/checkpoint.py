@@ -2,15 +2,17 @@
 pipeline (north rule: "resumable from per-partition checkpoints carrying
 lineage and extraction metrics").
 
-The corpus is split into ``n_parts`` **group-aligned** partitions
-(``part = pmod(xxhash64(group_id), n_parts)``). Every downstream stage —
-D1/D2 dedup, D7 pointer rewrite, T2 invalidation — partitions by
-``group_id`` (reference: "partition of the graph", nodes.py:96), so each
-checkpoint partition is semantically self-contained: processing parts in
-any order, or re-processing one after a crash, yields byte-identical
-tables to a single-shot run. At cluster scale each part is one Iceberg
-partition-overwrite commit; here each part writes its own
-``<table>/part=<k>`` parquet subdirectory (idempotent overwrite).
+The corpus is split into ``n_parts`` **group-aligned** partitions: the
+store's own ``gpart = pmod(xxhash64(group_id), n_parts)``. Every
+downstream stage — D1/D2 dedup, D7 pointer rewrite, T2 invalidation —
+partitions by ``group_id`` (reference: "partition of the graph",
+nodes.py:96), so each checkpoint partition is semantically
+self-contained: processing parts in any order, or re-processing one
+after a crash, yields byte-identical tables to a single-shot run. Each
+part is one partition-overwrite commit per table
+(``GraphStore.overwrite_parts`` of ``<table>/gpart=<k>``, Iceberg
+``overwritePartitions``; idempotent), so the finished build is an
+ordinary GraphStore with ``n_gparts=n_parts``.
 
 Lineage model (the ``checkpoints`` table, one row per part per run):
     run_id, part, status, input_fingerprint (order-insensitive xxhash64
@@ -19,27 +21,24 @@ Lineage model (the ``checkpoints`` table, one row per part per run):
     (per-stage extraction metrics), wall_s, started_at, finished_at.
 
 Resume = anti-join: parts whose latest checkpoint row has
-``status='done'`` AND a matching input fingerprint are skipped.
+``status='done'`` AND a matching input fingerprint are skipped. The
+lineage table has no ``group_id``, so it is a plain parquet append.
 """
 
 from __future__ import annotations
 
 import os
-import shutil
 import time
 from datetime import datetime, timezone
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from kgspark.functions.text import url_group_id
 from kgspark.pipeline import build_graph
+from kgspark.sources.store import GRAPH_TABLES, GraphStore
 
 CKPT_TABLE = "checkpoints"
-GRAPH_TABLES = ("episodes", "nodes", "edges", "mentions")
-
-
-def part_of(group_id_col: F.Column, n_parts: int) -> F.Column:
-    return F.pmod(F.xxhash64(group_id_col), F.lit(n_parts)).cast("int")
 
 
 def input_fingerprint(pages_part: DataFrame) -> tuple[int, int]:
@@ -58,6 +57,7 @@ class CheckpointedPipeline:
         self.spark = spark
         self.root = root
         self.n_parts = n_parts
+        self.store = GraphStore(root, n_gparts=n_parts)
 
     # ---------------------------------------------------------- bookkeeping
     def _ckpt_path(self) -> str:
@@ -96,13 +96,6 @@ class CheckpointedPipeline:
         df.coalesce(1).write.mode("append").parquet(self._ckpt_path())
 
     # ---------------------------------------------------------- execution
-    def _write_part(self, table: str, part: int, df: DataFrame) -> int:
-        path = os.path.join(self.root, table, f"part={part}")
-        if os.path.isdir(path):  # idempotent re-run after mid-write crash
-            shutil.rmtree(path)
-        df.write.mode("overwrite").option("compression", "zstd").parquet(path)
-        return self.spark.read.parquet(path).count()
-
     def run(
         self,
         pages: DataFrame,
@@ -113,9 +106,7 @@ class CheckpointedPipeline:
         """Process every partition not already checkpointed. Returns run
         metrics. ``fail_on_part`` injects a crash (for resume tests)."""
         staged = pages.withColumn(
-            "_part",
-            part_of(F.regexp_extract("url", r"^https?://([^/]+)/", 1), self.n_parts),
-        ).persist()
+            "_part", self.store.gpart(url_group_id(F.col("url")))).persist()
         done = self.completed_parts(run_id)
         metrics: dict = {"run_id": run_id, "parts": {}, "skipped": [], "n_parts": self.n_parts}
 
@@ -133,18 +124,13 @@ class CheckpointedPipeline:
             if n_pages == 0:
                 # a part that drifted to zero pages must not keep serving
                 # the rows a previous run wrote for it
-                for t in GRAPH_TABLES:
-                    stale = os.path.join(self.root, t, f"part={part}")
-                    if os.path.isdir(stale):
-                        shutil.rmtree(stale)
-                counts = {t: 0 for t in GRAPH_TABLES}
-                n_mention_rows = n_triple_rows = 0
+                g = {t: self.store.read(self.spark, t).limit(0)
+                     for t in GRAPH_TABLES if self.store.exists(t)}
             else:
                 g = build_graph(pages_part, now=now)
-                # extraction-stage metrics from the persisted graph tables
-                counts = {t: self._write_part(t, part, g[t]) for t in GRAPH_TABLES}
-                n_mention_rows = counts["mentions"]
-                n_triple_rows = counts["edges"]
+            # extraction-stage metrics from the committed graph tables
+            counts = {t: self.store.overwrite_parts(t, g[t], [part]) if t in g else 0
+                      for t in GRAPH_TABLES}
             wall = time.perf_counter() - t0
             row = {
                 "run_id": run_id,
@@ -153,8 +139,8 @@ class CheckpointedPipeline:
                 "input_hash": in_hash,
                 "n_pages": n_pages,
                 "n_episodes": counts["episodes"],
-                "n_mention_rows": n_mention_rows,
-                "n_triple_rows": n_triple_rows,
+                "n_mention_rows": counts["mentions"],
+                "n_triple_rows": counts["edges"],
                 "n_nodes": counts["nodes"],
                 "n_edges": counts["edges"],
                 "wall_s": round(wall, 3),
@@ -169,10 +155,7 @@ class CheckpointedPipeline:
     # ---------------------------------------------------------- readback
     def table(self, name: str) -> DataFrame:
         """Read a graph table across all completed parts."""
-        df = self.spark.read.option("basePath", os.path.join(self.root, name)).parquet(
-            os.path.join(self.root, name)
-        )
-        return df.drop("part") if "part" in df.columns else df
+        return self.store.read(self.spark, name)
 
     def lineage(self, run_id: str | None = None) -> DataFrame:
         ck = self.read_checkpoints()

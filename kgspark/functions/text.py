@@ -7,6 +7,7 @@
   lucene_sanitize, search_utils.py:59-76, helpers.py:45-79) as
   `split(lower(...), '\\W+')`.
 - name normalization + acronym (dedup support, SURVEY D2/D5).
+- ``url_group_id``: the one url → ``group_id`` rule (the url's host).
 """
 
 from __future__ import annotations
@@ -16,6 +17,12 @@ from pyspark.sql import functions as F
 
 ARTICLE_OPEN = '<article data-kg="content">'
 ARTICLE_CLOSE = "</article>"
+
+
+def url_group_id(url: Column) -> Column:
+    """group_id = the url's host: the graph partition key, and through
+    GraphStore's ``gpart`` hash the url-hash bucket of every table."""
+    return F.regexp_extract(url, r"^https?://([^/]+)/", 1)
 
 
 def html_to_text(html: Column) -> Column:

@@ -28,7 +28,7 @@ from pyspark.sql import types as T
 from pyspark.sql.functions import pandas_udf
 
 from kgspark.functions.embed import embedder_udf
-from kgspark.functions.text import html_to_text, norm_name
+from kgspark.functions.text import html_to_text, norm_name, url_group_id
 from kgspark.operators._extract_core import extract_episode
 from kgspark.schemas import MENTION_STRUCT, TRIPLE_STRUCT
 
@@ -91,7 +91,7 @@ def pages_to_episodes(pages: DataFrame) -> DataFrame:
             F.col("warc_ts"),
             F.col("lang"),
             content.alias("content"),
-            F.regexp_extract("url", r"^https?://([^/]+)/", 1).alias("group_id"),
+            url_group_id(F.col("url")).alias("group_id"),
         )
         .withColumn("uuid", sha1_uuid(F.lit("episode"), F.col("url")))
         .withColumn("source", detect_source(F.col("content")))

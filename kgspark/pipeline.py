@@ -13,7 +13,6 @@ tables.
 
 from __future__ import annotations
 
-import os
 from datetime import datetime
 
 from pyspark.sql import DataFrame
@@ -44,8 +43,8 @@ from kgspark.operators.temporal import invalidate_edges
 # costs one extra shuffle of per-salt partials — negligible on uniform
 # data, 1.3×+ faster on hot-key corpora (tools/skew_bench.py →
 # BENCH_SKEW.json) and unboundedly better as the hot key grows.
-# KGSPARK_EDGE_SALT=0 disables.
-EDGE_SALT: int | None = int(os.environ.get("KGSPARK_EDGE_SALT", "16")) or None
+# edge_salt=None disables.
+EDGE_SALT = 16
 
 
 def build_graph(
@@ -111,12 +110,8 @@ def assemble_graph(
     # unreplicated executor storage, so lineage CANNOT recompute them
     # after executor loss — on preemptible/spot clusters prefer
     # persist(MEMORY_AND_DISK) or reliable checkpointing for this
-    # subtree (KGSPARK_EAGER_CKPT=0 switches to a plain persist).
-    if os.environ.get("KGSPARK_EAGER_CKPT", "1") != "0":
-        nodes0 = build_entity_nodes(ext_nodes, embed_dim).localCheckpoint(eager=True)
-    else:
-        nodes0 = build_entity_nodes(ext_nodes, embed_dim).persist()
-        nodes0.count()
+    # subtree.
+    nodes0 = build_entity_nodes(ext_nodes, embed_dim).localCheckpoint(eager=True)
     if dedup:
         pairs = alias_pairs(nodes0)
         uuid_map = build_uuid_map(nodes0, pairs).persist()

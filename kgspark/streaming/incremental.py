@@ -43,10 +43,7 @@ from pyspark.sql import functions as F
 
 from kgspark.operators.extract import pages_to_episodes, run_extraction
 from kgspark.pipeline import assemble_graph
-from kgspark.sources.store import GraphStore
-
-EXT_TABLES = ("ext_nodes", "ext_edges", "raw_episodes")
-GRAPH_TABLES = ("episodes", "nodes", "edges", "mentions")
+from kgspark.sources.store import GRAPH_TABLES, GraphStore
 
 # Batches at or below this many episodes take the low-latency path:
 # AQE off for the duration of the splice/reassembly. At point-update
@@ -124,9 +121,9 @@ def ingest_pages(
     fast = (_point_update_confs(spark) if n_new <= POINT_UPDATE_MAX_EPISODES
             else nullcontext())
     with fast:
-        store.append_grouped("raw_episodes", episodes, bucket_key="uuid")
-        store.append_grouped("ext_nodes", ext_nodes, bucket_key="uuid")
-        store.append_grouped("ext_edges", ext_edges, bucket_key="uuid")
+        store.append_grouped("raw_episodes", episodes)
+        store.append_grouped("ext_nodes", ext_nodes)
+        store.append_grouped("ext_edges", ext_edges)
         # side tables are on disk now; reassembly reads them back, so the
         # extraction cache is dead weight from here (and a long-running
         # stream must not accumulate one dead cache per micro-batch)

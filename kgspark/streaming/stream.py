@@ -17,16 +17,8 @@ from datetime import datetime
 from pyspark.sql import SparkSession
 
 from kgspark.schemas import PAGES
-from kgspark.sources.store import GraphStore
+from kgspark.sources.store import INGEST_TABLES, GraphStore
 from kgspark.streaming.incremental import ingest_pages
-
-
-# every table the incremental ingest path appends to or splices — the
-# compaction sweep targets (graph tables + extraction side tables + the
-# maintained fulltext index)
-INGEST_TABLES = ("episodes", "nodes", "edges", "mentions",
-                 "raw_episodes", "ext_nodes", "ext_edges",
-                 "postings", "doc_stats")
 
 
 def stream_ingest(

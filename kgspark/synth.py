@@ -27,6 +27,7 @@ import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from kgspark.functions.text import url_group_id
 from kgspark.schemas import PAGES
 
 EPOCH = datetime(2024, 1, 1, tzinfo=timezone.utc)
@@ -213,5 +214,5 @@ def synth_pages(
 
 
 def group_id_col():
-    """group_id = registrable domain of the url (graph partition key)."""
-    return F.regexp_extract("url", r"^https?://([^/]+)/", 1)
+    """group_id of the ``url`` column (graph partition key)."""
+    return url_group_id(F.col("url"))

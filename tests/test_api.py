@@ -2,6 +2,7 @@
 (add_episode / add_triplet / search / communities / remove_episode)
 exercised end-to-end against a temp store."""
 
+import os
 from datetime import datetime
 
 import pytest
@@ -181,3 +182,37 @@ def test_remove_episode_not_resurrected_by_next_ingest(kg, spark, tmp_path):
     assert "Dora Lane" not in names
     assert not kg2.graph()["edges"].where(
         F.col("fact").contains("Hooli")).take(1)
+
+
+def test_removed_only_episode_keeps_partitioned_layout(spark, tmp_path):
+    """Removing a store's only episode empties every table. Each must
+    keep the gpart= layout and stay readable with its full schema, so a
+    fresh facade on the same root re-ingests into the same graph."""
+    root = str(tmp_path / "s4")
+
+    def add(k):
+        k.add_episode("solo", "Gina Park works at Umbrella.",
+                      reference_time=datetime(2024, 1, 1), group_id="gY",
+                      now=NOW)
+
+    def rows(k):  # column order follows the writing splice's plan
+        return {t: sorted(str(sorted(r.asDict(recursive=True).items()))
+                          for r in df.collect())
+                for t, df in k.graph().items()}
+
+    kg2 = KGSpark(spark, root)
+    add(kg2)
+    want = rows(kg2)
+    tables = sorted(os.listdir(root))
+    dtypes = {t: sorted(kg2.store.read(spark, t).dtypes) for t in tables}
+    kg2.remove_episode(kg2.graph()["episodes"].first()["uuid"], now=NOW)
+    assert set(tables) >= {"episodes", "nodes", "edges", "mentions",
+                           "raw_episodes", "postings"}
+    assert all(kg2.store.is_partitioned(t) for t in tables)
+
+    kg3 = KGSpark(spark, root)
+    for t in tables:
+        df = kg3.store.read(spark, t)
+        assert df.count() == 0 and sorted(df.dtypes) == dtypes[t], t
+    add(kg3)
+    assert rows(kg3) == want

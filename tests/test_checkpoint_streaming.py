@@ -64,6 +64,12 @@ def test_checkpoint_run_matches_oneshot(spark, tmp_path, oneshot):
     assert _edge_key_rows(cp.table("edges")) == oneshot["edges"]
     assert _node_key_rows(cp.table("nodes")) == oneshot["nodes"]
     assert cp.table("mentions").count() == oneshot["n_mentions"]
+    # the build is an ordinary GraphStore: one gpart= layout, same rows
+    store = GraphStore(str(tmp_path / "store"), n_gparts=4)
+    for t in ("episodes", "nodes", "edges", "mentions"):
+        assert store.is_partitioned(t)
+        assert (sorted(store.read(spark, t).collect(), key=str)
+                == sorted(cp.table(t).collect(), key=str))
     # lineage rows carry extraction metrics
     lin = cp.lineage("r1")
     rows = {r["part"]: r for r in lin.collect()}

@@ -7,7 +7,6 @@ Invariants:
 - per-partition file count drops to ceil(bytes/target) (=1 here)
 - partitions outside ``parts`` are never read or rewritten (mtime)
 - already-compact partitions are skipped (idempotent re-run is a no-op)
-- unpartitioned tables compact too
 """
 
 import os
@@ -83,17 +82,4 @@ def test_compact_scoped_to_parts(spark, tmp_path):
         assert os.path.exists(path) and os.path.getmtime(path) == mtime, (
             f"{path} rewritten by a compaction scoped elsewhere")
     assert len(_files_per_gpart(store, "t")[target[0]]) == 1
-    assert _rows(store.read(spark, "t")) == want
-
-
-def test_compact_unpartitioned(spark, tmp_path):
-    store = GraphStore(str(tmp_path / "s3"))
-    df = _mk_batch(spark, 4, 0, 200)
-    store.write("t", df.repartition(16))  # 16 small files
-    want = _rows(store.read(spark, "t"))
-    root = store.path("t")
-    n_before = len([f for f in os.listdir(root) if f.endswith(".parquet")])
-    assert n_before >= 16
-    stats = store.compact(spark, "t")
-    assert stats["files_after"] < stats["files_before"] == n_before
     assert _rows(store.read(spark, "t")) == want

@@ -35,8 +35,8 @@ def run_soak(spark, workdir: str, n_batches: int = 50,
     raises AssertionError on any invariant violation."""
     from pyspark.sql import functions as F
 
-    from kgspark.sources.store import GraphStore
-    from kgspark.streaming.stream import INGEST_TABLES, stream_ingest
+    from kgspark.sources.store import INGEST_TABLES, GraphStore
+    from kgspark.streaming.stream import stream_ingest
     from kgspark.synth import group_id_col, synth_pages
 
     n_docs = n_batches * docs_per_group
