@@ -31,7 +31,6 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from kgspark.functions.text import norm_name as _norm_name_col
-from kgspark.functions.text import url_group_id
 from kgspark.operators.community import build_communities as _build_communities
 from kgspark.operators.community import remove_communities as _remove_communities
 from kgspark.schemas import PAGES
@@ -116,9 +115,7 @@ class KGSpark:
             # ingest refreshed postings BEFORE the community update wrote
             # its new summaries — re-splice the batch's groups so the
             # community-kind postings reflect the updated communities
-            groups = pages.select(
-                url_group_id(F.col("url")).alias("group_id")).distinct()
-            self._refresh_postings_if_maintained(groups)
+            self._refresh_postings_if_maintained(counts["group_ids"])
         self._invalidate_postings()
         return counts
 
@@ -243,8 +240,7 @@ class KGSpark:
         self.store.append_grouped("raw_episodes", ep)
         self.store.append_grouped("ext_nodes", nodes)
         self.store.append_grouped("ext_edges", edges)
-        groups = self.spark.createDataFrame([(group_id,)], "group_id string")
-        counts = reassemble_groups(self.spark, self.store, groups, now=now,
+        counts = reassemble_groups(self.spark, self.store, [group_id], now=now,
                                    embed_dim=self.embed_dim,
                                    entity_types=self.entity_types)
         self._invalidate_postings()
@@ -348,10 +344,10 @@ class KGSpark:
         communities, members = _build_communities(g["nodes"], g["edges"], now,
                                                   self.embed_dim, group_ids)
         if group_ids and self.store.exists("communities"):
-            kept_c = self.store.read(self.spark, "communities").where(
-                ~F.col("group_id").isin(group_ids))
-            kept_m = self.store.read(self.spark, "community_members").where(
-                ~F.col("group_id").isin(group_ids))
+            kept_c, kept_m = (
+                self.store.in_groups(self.store.read(self.spark, t), group_ids,
+                                     keep=False)
+                for t in ("communities", "community_members"))
             communities = kept_c.unionByName(communities)
             members = kept_m.unionByName(members)
         communities = communities.localCheckpoint()
@@ -360,10 +356,8 @@ class KGSpark:
         self.store.write("community_members", members)
         # re-splice only the re-clustered groups' postings (full rebuild:
         # every group with nodes — the same O() as the rebuild itself)
-        affected = (self.spark.createDataFrame([(x,) for x in group_ids],
-                                               "group_id string")
-                    if group_ids else g["nodes"].select("group_id").distinct())
-        self._refresh_postings_if_maintained(affected)
+        self._refresh_postings_if_maintained(group_ids or [
+            r["group_id"] for r in g["nodes"].select("group_id").distinct().collect()])
         self._invalidate_postings()
         return {"communities": communities.count(), "members": members.count()}
 
@@ -402,13 +396,13 @@ class KGSpark:
                              "episodes before running graph analytics")
         return self.store.read(self.spark, "edges")
 
-    def _refresh_postings_if_maintained(self, groups: DataFrame) -> None:
+    def _refresh_postings_if_maintained(self, group_ids: list[str]) -> None:
         """Re-splice the given groups' postings after a mutation outside
         the ingest path (community rebuilds, cascades). No-op when the
         store has no maintained index (graphs written around the facade
         fall back to the in-memory build in postings())."""
         if self.store.exists("postings"):
-            refresh_postings_groups(self.spark, self.store, groups)
+            refresh_postings_groups(self.spark, self.store, group_ids)
 
     def remove_communities(self) -> None:
         _remove_communities(self.store, self.spark)
@@ -434,11 +428,10 @@ class KGSpark:
                .where(F.col("uuid") == edge_uuid).select("group_id").take(1))
         if not hit:
             return False
-        gid = hit[0]["group_id"]
-        self.store.delete_rows(self.spark, "edges", [gid],
+        gids = [hit[0]["group_id"]]
+        self.store.delete_rows(self.spark, "edges", self.store.parts_of(gids),
                                F.col("uuid") == edge_uuid)
-        self._refresh_postings_if_maintained(
-            self.spark.createDataFrame([(gid,)], "group_id string"))
+        self._refresh_postings_if_maintained(gids)
         self._invalidate_postings()
         return True
 
@@ -457,19 +450,20 @@ class KGSpark:
         if group_id is None:  # not an ingested episode — graph-table cascade only
             gid = self.store.remove_episode(self.spark, episode_uuid)
             if gid is not None:
-                self._refresh_postings_if_maintained(self.spark.createDataFrame(
-                    [(gid,)], "group_id string"))
+                self._refresh_postings_if_maintained([gid])
         else:
-            groups = self.spark.createDataFrame([(group_id,)], "group_id string")
-            reassemble_groups(self.spark, self.store, groups, now=now,
+            reassemble_groups(self.spark, self.store, [group_id], now=now,
                               embed_dim=self.embed_dim,
                               entity_types=self.entity_types)
         self._invalidate_postings()
 
     def delete_group(self, group_ids: list[str]) -> None:
+        parts = self.store.parts_of(group_ids)
         for t in INGEST_TABLES:
-            self.store.delete_rows(self.spark, t, group_ids,
-                                   F.col("group_id").isin(group_ids))
+            if self.store.exists(t):
+                self.store.overwrite_parts(t, self.store.in_groups(
+                    self.store.read_parts(self.spark, t, parts), group_ids,
+                    keep=False), parts)
         self._invalidate_postings()
 
     def compact(self, tables: tuple[str, ...] | None = None,

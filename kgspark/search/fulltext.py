@@ -37,15 +37,15 @@ _SEARCH_TEXT = {
     "episode": lambda df: df["content"],
     "community": lambda df: df["name"],
 }
+_KIND_TABLE = {"edge": "edges", "node": "nodes", "episode": "episodes",
+               "community": "communities"}
 
 
 def build_postings(graph: dict[str, DataFrame]) -> DataFrame:
     """Materialize the postings table for all present kinds; one shuffle
     per kind (groupBy (doc, term)), unioned."""
     parts = []
-    kind_table = {"edge": "edges", "node": "nodes", "episode": "episodes",
-                  "community": "communities"}
-    for kind, table in kind_table.items():
+    for kind, table in _KIND_TABLE.items():
         if table not in graph:
             continue
         df = graph[table]
@@ -105,9 +105,9 @@ def build_index(graph: dict[str, DataFrame]) -> PostingsIndex:
     return PostingsIndex(postings, build_doc_stats(postings))
 
 
-def refresh_postings_groups(spark: SparkSession, store, groups: DataFrame,
+def refresh_postings_groups(spark: SparkSession, store,
+                            group_ids: list[str],
                             parts: list[int] | None = None,
-                            group_list: list[str] | None = None,
                             graph_frames: dict | None = None) -> int:
     """Incrementally maintain the materialized ``postings`` / ``doc_stats``
     store tables for the given group_ids: rebuild the touched groups'
@@ -126,16 +126,11 @@ def refresh_postings_groups(spark: SparkSession, store, groups: DataFrame,
 
     Returns rows written into the touched postings partitions."""
     if parts is None:
-        parts = store.group_parts(groups)
-    # group_list (point-update fast path): literal IN-filter pushed to
-    # the scan instead of a broadcast semi-join — saves one broadcast-
-    # exchange driver job per action on each of these lineages
-    keep_groups = (
-        (lambda df: df.where(F.col("group_id").isin(group_list)))
-        if group_list is not None
-        else (lambda df: df.join(F.broadcast(groups), "group_id", "left_semi")))
-    kind_table = {"edge": "edges", "node": "nodes", "episode": "episodes",
-                  "community": "communities"}
+        parts = store.parts_of(group_ids)
+
+    def scoped(table: str) -> DataFrame:
+        return store.in_groups(store.read_parts(spark, table, parts), group_ids)
+
     # ``graph_frames``: the caller (reassemble_groups) already holds the
     # rebuilt touched-group rows in memory — identical to what a pruned
     # post-splice disk read would return — so passing them (a) skips the
@@ -146,21 +141,19 @@ def refresh_postings_groups(spark: SparkSession, store, groups: DataFrame,
     # pruned disk read, exactly as before.
     graph_frames = graph_frames or {}
     graph = {}
-    for table in kind_table.values():
+    for table in _KIND_TABLE.values():
         if table in graph_frames:
             graph[table] = graph_frames[table]
         elif store.exists(table):
-            graph[table] = keep_groups(store.read_parts(spark, table, parts))
+            graph[table] = scoped(table)
     if not graph:
         return 0
-    n = store.splice_groups(spark, "postings", build_postings(graph), groups,
-                            parts=parts, group_list=group_list)
+    n = store.splice_groups(spark, "postings", build_postings(graph),
+                            group_ids, parts=parts)
     # doc_stats from the just-written postings files (pruned read), not
     # from the lazy build_postings frame — that would re-run tokenization
-    stats = build_doc_stats(
-        keep_groups(store.read_parts(spark, "postings", parts)))
-    store.splice_groups(spark, "doc_stats", stats, groups, parts=parts,
-                        group_list=group_list)
+    store.splice_groups(spark, "doc_stats", build_doc_stats(scoped("postings")),
+                        group_ids, parts=parts)
     return n
 
 

@@ -35,6 +35,7 @@ INGEST_TABLES = GRAPH_TABLES + ("raw_episodes", "ext_nodes", "ext_edges",
                                 "postings", "doc_stats")
 
 N_GPARTS = 64
+LITERAL_GROUPS_MAX = 64  # see GraphStore.in_groups
 
 
 class GraphStore:
@@ -61,18 +62,35 @@ class GraphStore:
     def gpart(self, group_id: Column) -> Column:
         return F.pmod(F.xxhash64(group_id), F.lit(self.n_gparts)).cast("int")
 
-    def group_parts(self, groups: DataFrame) -> list[int]:
-        """Distinct gpart ids for a (small) group_id frame — the
-        partition list a splice/delete touches."""
-        return [
-            r["gpart"]
-            for r in groups.select(
-                self.gpart(F.col("group_id")).alias("gpart")).distinct().collect()
-        ]
+    def parts_of(self, group_ids: list[str]) -> list[int]:
+        """Distinct gpart ids of ``group_ids`` — the partition list a
+        splice/delete of those groups touches (one small job)."""
+        g = SparkSession.active().createDataFrame(
+            [(x,) for x in group_ids], "group_id string")
+        return sorted(r["gpart"] for r in g.select(
+            self.gpart(F.col("group_id")).alias("gpart")).distinct().collect())
 
-    def _parts_of(self, spark: SparkSession, group_ids: list[str]) -> list[int]:
-        return self.group_parts(spark.createDataFrame(
-            [(g,) for g in group_ids], "group_id string"))
+    @staticmethod
+    def in_groups(df: DataFrame, group_ids: list[str],
+                  keep: bool = True) -> DataFrame:
+        """Keep (or, with ``keep=False``, drop) the rows of ``df`` whose
+        group_id is in ``group_ids`` — the one place a frame is scoped to
+        a group set. Up to LITERAL_GROUPS_MAX ids: a literal IN filter
+        pushed to the scan, since a broadcast join adds one exchange job
+        (~60 ms) to every action on its lineage (BASELINE fact 24). Above
+        it: a broadcast semi/anti join, since the IN Column costs one py4j
+        call per literal (local[1]: 0.57 s for 1k ids, 5.2 s for 10k, vs
+        0.035 / 0.086 s to ``createDataFrame`` them) and a bulk batch
+        applies the scope ~10 times. The join is on an expression, not
+        USING group_id, so ``df`` keeps its column order. group_id is
+        non-nullable in every table, so NOT IN has no NULL trap."""
+        if len(group_ids) <= LITERAL_GROUPS_MAX:
+            hit = F.col("group_id").isin(group_ids)
+            return df.where(hit if keep else ~hit)
+        g = F.broadcast(df.sparkSession.createDataFrame(
+            [(x,) for x in group_ids], "gid string"))
+        return df.join(g, df["group_id"] == g["gid"],
+                       "left_semi" if keep else "left_anti")
 
     def is_partitioned(self, table: str) -> bool:
         p = self.path(table)
@@ -162,9 +180,8 @@ class GraphStore:
         return n
 
     def splice_groups(self, spark: SparkSession, table: str,
-                      rebuilt: DataFrame, groups: DataFrame,
-                      parts: list[int] | None = None,
-                      group_list: list[str] | None = None) -> int:
+                      rebuilt: DataFrame, group_ids: list[str],
+                      parts: list[int] | None = None) -> int:
         """Replace the given groups' rows with ``rebuilt``, touching only
         their ``gpart`` partitions — the Iceberg
         ``overwritePartitions`` emulation the incremental path runs per
@@ -173,22 +190,13 @@ class GraphStore:
         test_checkpoint_streaming). Returns rows written to the affected
         partitions. ``parts`` short-circuits the gpart lookup when the
         caller already collected it (micro-batch ingest splices 6+
-        tables for the same groups — one tiny lookup job each adds up).
-        ``group_list`` (point-update fast path) swaps the anti-join for a
-        literal NOT-IN filter pushed to the scan: a broadcast join
-        materializes its exchange as an EXTRA driver job inside every
-        action on this lineage, and at one-episode batch sizes those
-        fixed ~60 ms jobs dominate wall time (BASELINE fact 24).
-        group_id is non-nullable in every table schema, so NOT IN has no
-        NULL trap here."""
+        tables for the same groups — one tiny lookup job each adds up)."""
         if parts is None:
-            parts = self.group_parts(groups)
+            parts = self.parts_of(group_ids)
         if not self.exists(table):
             return self.overwrite_parts(table, rebuilt, parts)
-        kept = self.read_parts(spark, table, parts)
-        kept = (kept.where(~F.col("group_id").isin(group_list))
-                if group_list is not None
-                else kept.join(groups, "group_id", "left_anti"))
+        kept = self.in_groups(self.read_parts(spark, table, parts), group_ids,
+                              keep=False)
         out = kept.unionByName(rebuilt, allowMissingColumns=True)
         return self.overwrite_parts(table, out, parts)
 
@@ -264,13 +272,12 @@ class GraphStore:
 
     # ---------------------------------------------------------- S12 delete
     def delete_rows(self, spark: SparkSession, table: str,
-                    group_ids: list[str], cond: Column) -> int:
-        """Delete the rows matching ``cond`` from the partitions of
-        ``group_ids`` (rows outside those partitions are never read).
-        Returns the rows kept in the rewritten partitions."""
+                    parts: list[int], cond: Column) -> int:
+        """Delete the rows matching ``cond`` from the partitions ``parts``
+        (rows outside those partitions are never read). Returns the rows
+        kept in the rewritten partitions."""
         if not self.exists(table):
             return 0
-        parts = self._parts_of(spark, group_ids)
         kept = self.read_parts(spark, table, parts).where(~cond)
         return self.overwrite_parts(table, kept, parts)
 
@@ -288,9 +295,10 @@ class GraphStore:
             return None
         group_id = hit[0]["group_id"]
         # each rewrite is scoped to the episode's own gpart partition
+        parts = self.parts_of([group_id])
         for t, key in (("raw_episodes", "uuid"), ("ext_nodes", "episode_uuid"),
                        ("ext_edges", "episode_uuid")):
-            self.delete_rows(spark, t, [group_id], F.col(key) == episode_uuid)
+            self.delete_rows(spark, t, parts, F.col(key) == episode_uuid)
         return group_id
 
     def remove_episode(self, spark: SparkSession,
@@ -307,7 +315,7 @@ class GraphStore:
         if not hit:
             return None
         group_id: str = hit[0]["group_id"]
-        parts = self._parts_of(spark, [group_id])
+        parts = self.parts_of([group_id])
         # the read mentions cover every group in the touched partitions,
         # so hash-collision co-tenant nodes keep their support rows
         kept = cascade_remove(

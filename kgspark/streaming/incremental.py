@@ -18,10 +18,11 @@ Design (materialized-incremental-view pattern):
 
 This gives exact convergence: after any sequence of batches, every table
 is byte-identical to a one-shot ``build_graph`` over the union of all
-pages (tested in tests/test_streaming.py) — i.e. the incremental path
-has full `add_episode` semantics including D5 resolution against the
-existing graph (dedup within re-assembled group) and T2 re-invalidation,
-which the reference's own bulk path skips (graphiti.py:520-522).
+pages (tested in tests/test_checkpoint_streaming.py) — i.e. the
+incremental path has full `add_episode` semantics including D5
+resolution against the existing graph (dedup within re-assembled group)
+and T2 re-invalidation, which the reference's own bulk path skips
+(graphiti.py:520-522).
 
 At cluster scale: affected-group splice = Iceberg
 ``overwritePartitions`` on the group-hash partition
@@ -75,20 +76,23 @@ def ingest_pages(
     now: datetime | None = None,
     embed_dim: int = 64,
     entity_types: dict | None = None,
-) -> dict[str, int]:
+) -> dict:
     """One micro-batch: extract new pages once, append extraction side
-    tables, re-assemble affected groups, splice graph tables."""
+    tables, re-assemble affected groups, splice graph tables. Returns
+    the rows written per table, ``new_episodes`` and ``group_ids`` (the
+    groups the batch touched)."""
     ext = run_extraction(pages_to_episodes(pages))
     episodes, ext_nodes, ext_edges = ext.episodes, ext.ext_nodes, ext.ext_edges
 
-    # touched groups + gpart partitions, collected ONCE off the shared
-    # extraction cache and reused by the idempotence scan and the
-    # reassembly (each group_parts lookup is its own driver job). Tiny by
-    # construction — the group set is the batch's blast radius.
-    glist = sorted(r["group_id"] for r in
-                   episodes.select("group_id").distinct().collect())
-    groups = spark.createDataFrame([(g,) for g in glist], "group_id string")
-    parts = store.group_parts(groups)
+    # touched groups + gpart partitions, collected ONCE (one job) off the
+    # shared extraction cache and reused by the idempotence scan, the
+    # reassembly and every splice. Tiny by construction — the group set
+    # is the batch's blast radius.
+    pairs = episodes.select(
+        "group_id", store.gpart(F.col("group_id")).alias("gpart")
+    ).distinct().collect()
+    group_ids = sorted({r["group_id"] for r in pairs})
+    parts = sorted({r["gpart"] for r in pairs})
 
     # idempotence / exactly-once per url: drop episodes already ingested
     # (stream restarts can redeliver a batch). A redelivered episode has
@@ -114,7 +118,7 @@ def ingest_pages(
     n_new = episodes.count()
     if n_new == 0:
         ext.cached.unpersist()
-        return {"new_episodes": 0}
+        return {"new_episodes": 0, "group_ids": group_ids}
 
     from contextlib import nullcontext
 
@@ -129,14 +133,13 @@ def ingest_pages(
         # stream must not accumulate one dead cache per micro-batch)
         ext.cached.unpersist()
 
-        # glist was collected before the idempotence anti-join, so a
+        # group_ids was collected before the idempotence anti-join, so a
         # redelivered-only group may get one redundant (idempotent)
         # rebuild after a stream restart — harmless, and it saves the
         # second distinct-groups job on every normal batch
-        counts = {"new_episodes": n_new}
+        counts = {"new_episodes": n_new, "group_ids": group_ids}
         counts.update(reassemble_groups(
-            spark, store, groups, now, embed_dim, entity_types,
-            group_list=glist if n_new <= POINT_UPDATE_MAX_EPISODES else None,
+            spark, store, group_ids, now, embed_dim, entity_types,
             parts=parts))
     return counts
 
@@ -144,33 +147,23 @@ def ingest_pages(
 def reassemble_groups(
     spark: SparkSession,
     store: GraphStore,
-    groups: DataFrame,
+    group_ids: list[str],
     now: datetime | None = None,
     embed_dim: int = 64,
     entity_types: dict | None = None,
-    group_list: list[str] | None = None,
     parts: list[int] | None = None,
 ) -> dict[str, int]:
     """Rebuild the graph tables for the given group_ids from the stored
     per-episode extraction side tables and splice them over the previous
     state (no re-extraction — summary_text persisted with raw_episodes).
-    Shared by batch ingest and add_triplet. ``group_list`` (point-update
-    fast path) swaps every broadcast semi-join on the tiny groups frame
-    for a literal IN filter pushed to the parquet scan — each broadcast
-    join otherwise costs one extra driver job per action on its lineage,
-    and at single-episode batch sizes those fixed ~60 ms jobs are the
-    wall-clock floor (BASELINE fact 24)."""
+    Shared by batch ingest, add_triplet and remove_episode."""
     if parts is None:
-        parts = store.group_parts(groups)
-    keep_groups = (
-        (lambda df: df.where(F.col("group_id").isin(group_list)))
-        if group_list is not None
-        else (lambda df: df.join(F.broadcast(groups), "group_id", "left_semi")))
+        parts = store.parts_of(group_ids)
     # gpart prune cuts the scan to the touched partitions; the group
     # filter then drops hash-collision co-tenants of those partitions.
-    all_eps = keep_groups(store.read_parts(spark, "raw_episodes", parts))
-    all_nodes = keep_groups(store.read_parts(spark, "ext_nodes", parts))
-    all_edges = keep_groups(store.read_parts(spark, "ext_edges", parts))
+    all_eps, all_nodes, all_edges = (
+        store.in_groups(store.read_parts(spark, t, parts), group_ids)
+        for t in ("raw_episodes", "ext_nodes", "ext_edges"))
     g = assemble_graph(all_eps, all_nodes, all_edges, embed_dim, now,
                        entity_types=entity_types)
     # Per-table lazy localCheckpoint + a thread pool over the 4
@@ -217,8 +210,8 @@ def reassemble_groups(
             # always release waiters — a checkpoint error must surface as
             # the postings task's KeyError, never as a deadlocked pool
             ckpt_ready[t].set()
-        return t, store.splice_groups(spark, t, ckpt[t], groups,
-                                      parts=parts, group_list=group_list)
+        return t, store.splice_groups(spark, t, ckpt[t], group_ids,
+                                      parts=parts)
 
     # keep the materialized fulltext index current (the reference's
     # Lucene indexes update on every save) — same splice machinery, so
@@ -233,7 +226,7 @@ def reassemble_groups(
         for t in ("episodes", "nodes", "edges"):
             ckpt_ready[t].wait()
         return "postings", refresh_postings_groups(
-            spark, store, groups, parts=parts, group_list=group_list,
+            spark, store, group_ids, parts=parts,
             graph_frames={t: ckpt[t] for t in ("episodes", "nodes", "edges")})
 
     from concurrent.futures import ThreadPoolExecutor

@@ -15,7 +15,7 @@ from pyspark.sql import functions as F
 
 from kgspark.checkpoint import CheckpointedPipeline
 from kgspark.pipeline import build_graph
-from kgspark.sources.store import GraphStore
+from kgspark.sources.store import LITERAL_GROUPS_MAX, GraphStore
 from kgspark.streaming import ingest_pages, stream_ingest
 from kgspark.synth import synth_pages
 
@@ -145,8 +145,7 @@ def test_incremental_splice_prunes_partitions(spark, tmp_path, oneshot):
     before = {t: snapshot(t) for t in tables}
     counts = ingest_pages(spark, store, pages.where(group_id_col() == target), now=NOW)
     assert counts["new_episodes"] > 0
-    [tpart] = store.group_parts(
-        spark.createDataFrame([(target,)], "group_id string"))
+    [tpart] = store.parts_of([target])
     untouched = 0
     for t, snap in before.items():
         for p, mtime in snap.items():
@@ -161,6 +160,43 @@ def test_incremental_splice_prunes_partitions(spark, tmp_path, oneshot):
     assert _node_key_rows(store.read(spark, "nodes")) == oneshot["nodes"]
     assert store.read(spark, "episodes").count() == oneshot["n_episodes"]
     pages.unpersist()
+
+
+def test_splice_groups_literal_and_broadcast_arms(spark, tmp_path):
+    """A splice scopes its groups by a literal IN filter up to
+    LITERAL_GROUPS_MAX ids and by a broadcast anti-join above that. Both
+    arms must write the same rows, keep the table's column order (group_id
+    is not the first column here), and leave other partitions alone."""
+    schema = "kind string, group_id string, n long"
+    rows = [(f"k{i}", f"g{i % 6}", i) for i in range(24)]
+    target = "g0"
+    rebuilt = spark.createDataFrame([("new", target, 100)], schema)
+    absent = [f"absent{i}" for i in range(LITERAL_GROUPS_MAX + 6)]
+    got = {}
+    for arm, group_ids in (("literal", [target]),
+                           ("broadcast", [target] + absent)):
+        store = GraphStore(str(tmp_path / arm), n_gparts=4)
+        store.write("t", spark.createDataFrame(rows, schema))
+        [tpart] = store.parts_of([target])
+        plan = store.in_groups(store.read(spark, "t"), group_ids, keep=False) \
+            ._jdf.queryExecution().optimizedPlan().toString()
+        assert ("Join LeftAnti" in plan) == (arm == "broadcast"), plan
+        before = {os.path.join(d, f): os.path.getmtime(os.path.join(d, f))
+                  for d, _dirs, fs in os.walk(store.path("t"))
+                  for f in fs if f.endswith(".parquet")}
+        store.splice_groups(spark, "t", rebuilt, group_ids, parts=[tpart])
+        others = {p: m for p, m in before.items()
+                  if f"gpart={tpart}" + os.sep not in p}
+        assert others and all(os.path.getmtime(p) == m for p, m in others.items())
+        # the spliced partition's own files keep the table's column order
+        spliced = spark.read.parquet(os.path.join(store.path("t"), f"gpart={tpart}"))
+        assert spliced.columns == ["kind", "group_id", "n"], arm
+        df = GraphStore(store.root, n_gparts=4).read(spark, "t")
+        got[arm] = sorted(tuple(r) for r in df.select(*spliced.columns).collect())
+    assert got["literal"] == got["broadcast"]
+    assert ("new", target, 100) in got["literal"]
+    assert not [r for r in got["literal"] if r[1] == target and r[0] != "new"]
+    assert len(got["literal"]) == len(rows) - 4 + 1
 
 
 def test_stream_ingest_available_now(spark, tmp_path, oneshot):

@@ -96,8 +96,7 @@ def test_postings_splice_prunes_partitions(spark, tmp_path):
     counts = ingest_pages(spark, store, pages.where(group_id_col() == target),
                           now=NOW)
     assert counts["postings"] > 0
-    [tpart] = store.group_parts(
-        spark.createDataFrame([(target,)], "group_id string"))
+    [tpart] = store.parts_of([target])
     untouched = 0
     for t, snap in before.items():
         for p, mtime in snap.items():
